@@ -127,10 +127,11 @@ object Bench {
       .map(e => "\"" + e.replace("\"", "'").replace("\n", " ").take(120) + "\"")
       .mkString("[", ",", "]")
     val mtimes = Provenance.fixtureMtimesJson(sfDir)
+    val sf = Provenance.jsonString(sfDir)
     val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,""" +
       s""""passes":$passes,""" +
       s""""warmup_total":${f3(warm)},"n_queries":${results.size},"errors":$err,""" +
-      s""""fixture_mtimes":$mtimes,"sf":"$sfDir"}"""
+      s""""fixture_mtimes":$mtimes,"sf":$sf}"""
     // Full-precision artifact (with per-query pass counts) ALWAYS lands in
     // a file — a file survives independent of console buffering.
     val outPath = java.nio.file.Paths.get(
@@ -140,12 +141,17 @@ object Bench {
       results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}") +
       s""","passes":$passes,"pass_counts":$nPasses,""" +
       s""""warmup_total":$warm,"n_queries":${results.size},"errors":$err,""" +
-      s""""fixture_mtimes":$mtimes,"sf":"$sfDir"}"""
-    java.nio.file.Files.writeString(outPath, full + "\n")
+      s""""fixture_mtimes":$mtimes,"sf":$sf}"""
+    // a failed write (say, an unwritable cwd) must not lose the console
+    // lines, which carry the same totals
+    try java.nio.file.Files.writeString(outPath, full + "\n")
+    catch {
+      case e: Exception => System.err.println(s"bench: cannot write $outPath: $e")
+    }
     val shortLine = s"""{"metric":"total","value":${f3(total)},"unit":"sec",""" +
       s""""n_queries":${results.size},"passes":$passes,""" +
       s""""warmup_total":${f3(warm)},"n_errors":${errors.size},"errors":$errShort,""" +
-      s""""queries_file":"$outPath","sf":"$sfDir"}"""
+      s""""queries_file":${Provenance.jsonString(outPath.toString)},"sf":$sf}"""
     println(line)
     println(shortLine)
     spark.stop()

@@ -22,4 +22,18 @@ object Provenance {
       "\"" + f.getName + "\":\"" + iso + "\""
     }.mkString("{", ",", "}")
   }
+
+  /** A JSON string literal: escapes backslash, quote and ALL control
+    * chars (<0x20) — a tab or CR in a query's SQL text or a path would
+    * otherwise make a reader's json.load fail on the whole artifact.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -131,31 +131,13 @@ object SparkEntry {
         name -> sqls.map(_._1).filter(m => m != name &&
           sql.contains(em.hubRef(m)))
       }.toMap
-      val depth = scala.collection.mutable.Map.empty[String, Int]
-      compiled.sources.map(_.source.name).foreach { n =>
-        depth(n) = (deps(n).map(d => depth(d) + 1) :+ 0).max
-      }
-      sqls.map(_._1).groupBy(depth).toSeq.sortBy(_._1).foreach { case (_, lvl) =>
+      Runner.levels(sqls.map(_._1), deps).foreach { lvl =>
         val (eager, lazyHubs) = lvl.partition(consumed)
-        if (eager.size <= 1)
-          eager.foreach { name =>
-            s.sql(bySource(name)).localCheckpoint()
-              .createOrReplaceTempView("hub_" + name)
-          }
-        else {
-          // parse+register serially (cheap, needs dep views), checkpoint
-          // concurrently (the expensive blocking jobs)
-          val dfs = eager.map(name => name -> s.sql(bySource(name)))
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(dfs.size, 4))
-          try {
-            dfs.map { case (name, df) =>
-              pool.submit(new java.util.concurrent.Callable[Unit] {
-                def call(): Unit = df.localCheckpoint()
-                  .createOrReplaceTempView("hub_" + name)
-              })
-            }.foreach(_.get())
-          } finally pool.shutdown()
+        // parse+register serially (cheap, needs dep views), checkpoint
+        // concurrently (the expensive blocking jobs)
+        val dfs = eager.map(name => name -> s.sql(bySource(name)))
+        Runner.inParallel(dfs) { case (name, df) =>
+          df.localCheckpoint().createOrReplaceTempView("hub_" + name)
         }
         lazyHubs.foreach { name =>
           s.sql(bySource(name)).createOrReplaceTempView("hub_" + name)

@@ -5,6 +5,7 @@ import graft.core._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Builds an output table's DataFrame from its channels
   * (reference: u_output_generate_query.sql:53-155).
@@ -81,6 +82,27 @@ final class OutputPlanner(cp: CompiledProject, hubs: String => DataFrame) {
   * DAG — Catalyst sees through the whole pipeline (column pruning reaches
   * the scans across source boundaries), the right default for tests and
   * moderate scale.
+  *
+  * Hub store: `hub`, `buildAllHubs`, `hubSelect`, `output` and `run` all
+  * take their hubs from [[hubProvider]], i.e. from one store keyed by
+  * (source, rule-name set). Each request carries only the rules its
+  * consumer transitively reaches ([[graft.analyze.Pruner]]), except
+  * `hub`/`buildAllHubs`, which ask for every rule.
+  *  - Targets: the full rule set materializes at the source's own target
+  *    (`$dir/<hubName>`, or table `<hubName>`); a strict subset at the
+  *    sibling `<hubName>_<digest of the sorted rule names>`, never on the
+  *    shared target (writing only the reached rules keeps the fact hub's
+  *    unused lookup/aggregate columns off the write: q_feature_customer_mat
+  *    9.6 → 4.5 s in r17). `materializeTables` widens every request to the full
+  *    rule set (bucketed hub tables, the reference contract).
+  *  - Reuse, materialized: any hub already written for the source whose
+  *    rule set covers the request serves it (the parquet read prunes the
+  *    extra columns), so a covered request writes nothing — after
+  *    `buildAllHubs` every request is covered.
+  *  - Reuse, lazy: exact rule-set matches only; a wider plan would bring
+  *    back the lookup joins the pruning removes.
+  *  - Every build holds its target's lock, so concurrent callers never
+  *    write one target twice.
   */
 final class Runner(
     cp: CompiledProject,
@@ -95,39 +117,58 @@ final class Runner(
       */
     materializeTables: Boolean = false) {
 
-  private val hubCache = mutable.LinkedHashMap.empty[String, DataFrame]
-  // Per-name build locks (ADVICE r16): the cache reads are synchronized but
-  // the build/write is not, so two concurrent hub(name) callers (possible
-  // via the public API outside prebuildHubs' distinct-per-level guarantee)
-  // could both run the overwriteTable/parquet write on the same target.
-  // Holding name's lock while building takes dependency locks in DAG order
-  // (the compiler guarantees acyclic deps), so no deadlock is possible.
-  private val hubLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private val materialized = materializeDir.isDefined || materializeTables
+  private val allRules: Map[String, Set[String]] =
+    cp.sources.map(cs => cs.source.name -> cs.rules.map(_.name).toSet).toMap
+  private val store =
+    new java.util.concurrent.ConcurrentHashMap[(String, Set[String]), DataFrame]()
+  // One lock per write target. A build holds its target's lock while its
+  // dependencies take theirs, i.e. always in DAG order (the compiler
+  // rejects cycles), so no deadlock is possible.
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  def hub(name: String): DataFrame =
-    hubCache.synchronized(hubCache.get(name)).getOrElse {
-      hubLocks.computeIfAbsent(name, _ => new Object).synchronized {
-        hubCache.synchronized(hubCache.get(name)).getOrElse(buildHub(name))
+  /** Hub frames carrying, per source, the rules in `needed` (none if the
+    * source is absent) — lookup joins and aggregate shuffles feeding other
+    * rules are never planned (see graft.analyze.Pruner for why Catalyst
+    * cannot do this). The one way into the store; public for callers that
+    * know their rule set (RelationAudit: the audit joins read relation KEY
+    * columns, not the full enriched hub — planning every lookup/aggregate
+    * rule just to count key matches re-built the whole fact-hub join tree
+    * once per audited relation).
+    */
+  def hubProvider(needed: Map[String, Set[String]]): String => DataFrame = {
+    lazy val get: String => DataFrame = name => {
+      val all = allRules(name)
+      val rules = if (materializeTables) all else needed.getOrElse(name, Set.empty) & all
+      def stored = Option(store.get(name -> rules)).orElse(
+        if (!materialized) None
+        else store.asScala.collectFirst { case ((`name`, r), df) if rules.subsetOf(r) => df })
+      stored.getOrElse {
+        val cs = cp.compiledSource(name)
+        val suffix = if (rules == all) "" else "_" + Runner.digest(rules)
+        locks.computeIfAbsent(cs.source.hubName + suffix, _ => new Object).synchronized {
+          stored.getOrElse {
+            val pruned = cs.copy(rules = cs.rules.filter(r => rules(r.name)))
+            val built =
+              materialize(pruned, suffix, new SourcePlanner(cp, pruned, reader, get).plan())
+            store.put(name -> rules, built)
+            built
+          }
+        }
       }
     }
-
-  private def buildHub(name: String): DataFrame = {
-      val cs = cp.compiledSource(name)
-      // dependencies first (topo order guarantees no cycles)
-      cs.dependsOn.foreach(hub)
-      val built = materialize(cs,
-        new SourcePlanner(cp, cs, reader, hub).plan())
-      hubCache.synchronized(hubCache.getOrElseUpdate(name, built))
+    get
   }
 
-  /** The DROP/CREATE materialization itself (write + read-back), shared by
-    * the full-hub cache path and the per-output pruned path. Jobs are
-    * labeled per hub (guide §1.5) — descriptions are thread-local, so the
-    * level-parallel prebuild labels each concurrent write correctly.
+  /** The DROP/CREATE materialization itself (write + read-back) at target
+    * `<hubName><suffix>`. Its jobs are labeled `hub materialize:
+    * <source><suffix>` (guide §1.5), one label per target; a full hub's is
+    * `hub materialize: <source>`, which perfbench's per-hub write times
+    * match. Descriptions are thread-local, so the level-parallel prebuild
+    * labels each concurrent write correctly.
     */
   private def materialize(
-      cs: CompiledSource, planned: DataFrame): DataFrame = {
+      cs: CompiledSource, suffix: String, planned: DataFrame): DataFrame = {
     var built = planned
     val sc = built.sparkSession.sparkContext
     // A write-parallelism floor (repartition(cores) before the write when
@@ -135,7 +176,7 @@ final class Runner(
     // (r17): parallelizing the parquet encode was outweighed by the added
     // exchange per hub write plus 32 tiny files per hub whose read-back
     // taxes every downstream consumer — q_feature_customer_mat 5.2→8.3 s.
-    sc.setJobDescription(s"hub materialize: ${cs.source.name}")
+    sc.setJobDescription(s"hub materialize: ${cs.source.name}$suffix")
     try {
       if (materializeTables) {
         val s = cs.source
@@ -151,7 +192,7 @@ final class Runner(
         }
         built = built.sparkSession.table(s.hubName)
       } else materializeDir.foreach { dir =>
-        val path = s"$dir/${cs.source.hubName}"
+        val path = s"$dir/${cs.source.hubName}$suffix"
         val writer = built.write.mode("overwrite")
         val partitioned =
           if (cs.source.hubPartitionBy.nonEmpty)
@@ -166,146 +207,52 @@ final class Runner(
 
   /** Materialize-mode job overlap: hub writes are blocking Spark actions,
     * and a straggling write tail leaves the cluster idle while the next
-    * independent hub waits (guide §2.6). Group the requested hubs'
-    * transitive closure into dependency levels and submit each level's
-    * writes from a small thread pool — Spark schedules concurrent jobs
-    * FIFO, so the next hub's tasks back-fill executors freed by the
-    * current hub's tail. Results are identical: levels run in topological
-    * order, so every dependency is in `hubCache` before any dependent
-    * plans, and names within a level are distinct (no double-build).
-    * Lazy mode (no materialization) skips this — hub "builds" there are
-    * driver-side plan construction with nothing to overlap.
+    * independent hub waits (guide §2.6). Fetch the requested hubs'
+    * transitive closure from `get` level by level, each level from a small
+    * thread pool — Spark schedules concurrent jobs FIFO, so the next hub's
+    * tasks back-fill executors freed by the current hub's tail. Results are
+    * identical: levels run in topological order, so every dependency is
+    * stored before any dependent plans, and the per-target locks make a
+    * fetch of an already-stored hub a cheap no-op. Lazy mode skips this —
+    * hub "builds" there are driver-side plan construction with nothing to
+    * overlap.
     */
-  private def prebuildHubs(
-      names: Seq[String], build: String => DataFrame): Unit =
-    if (materializeDir.isDefined || materializeTables) {
-      val need = mutable.LinkedHashSet.empty[String]
-      def visit(n: String): Unit = if (!need.contains(n)) {
-        cp.compiledSource(n).dependsOn.foreach(visit); need += n
-      }
-      names.foreach(visit)
-      val depth = mutable.Map.empty[String, Int]
-      need.foreach { n =>
-        depth(n) =
-          (cp.compiledSource(n).dependsOn.toSeq.map(d => depth(d) + 1) :+ 0).max
-      }
-      need.toSeq.groupBy(depth).toSeq.sortBy(_._1).foreach { case (_, lvl) =>
-        // build(n) is idempotent and per-name locked, so an already-cached
-        // name is a cheap no-op; names within a level are distinct
-        if (lvl.size <= 1) lvl.foreach(build)
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(lvl.size, 4))
-          try {
-            lvl.map(n => pool.submit(new java.util.concurrent.Callable[Unit] {
-              def call(): Unit = { build(n); () }
-            })).foreach(_.get())
-          } finally pool.shutdown()
-        }
-      }
-    }
+  private def prebuildHubs(names: Seq[String], get: String => DataFrame): Unit =
+    if (materialized)
+      Runner.levels(names, cp.compiledSource(_).dependsOn)
+        .foreach(Runner.inParallel(_) { n => get(n); () })
+
+  def hub(name: String): DataFrame = hubProvider(allRules)(name)
 
   def buildAllHubs(): Map[String, DataFrame] = {
-    prebuildHubs(cp.sources.map(_.source.name), hub)
-    cp.sources.foreach(cs => hub(cs.source.name))
-    hubCache.toMap
-  }
-
-  /** Materializing twin of [[prunedHubs]] (r17, guide §6 "prune what you
-    * write"): each hub in the output's transitive closure is still written
-    * and re-read (the reference's DROP/CREATE contract — restartability,
-    * file-backed stats), but the written hub carries only the rules the
-    * requesting output's closure reaches. The enriched FACT hub's unused
-    * lookup/aggregate columns dominated the materialized write (profiled:
-    * one 4.3 s write job of 9.3 s total for q_feature_customer_mat).
-    * Output values are identical to the full-hub path: the lazy mode has
-    * always planned this exact closure (Pruner.neededForOutput) and is
-    * oracle-gated against the same SQL. Per-call cache, like prunedHubs:
-    * a different output's pruning must not bleed in; the shared full-hub
-    * cache is bypassed on purpose (a full cached hub would be wider than
-    * the contract requires, a pruned cached hub could starve a later
-    * full-hub caller).
-    */
-  private def prunedMatHubs(
-      needed: Map[String, Set[String]]): String => DataFrame = {
-    val cache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-    val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-    lazy val get: String => DataFrame = name =>
-      Option(cache.get(name)).getOrElse {
-        locks.computeIfAbsent(name, _ => new Object).synchronized {
-          Option(cache.get(name)).getOrElse {
-            val cs = cp.compiledSource(name)
-            cs.dependsOn.foreach(get(_))
-            val keep = needed.getOrElse(name, Set.empty)
-            val pruned = cs.copy(rules = cs.rules.filter(r => keep.contains(r.name)))
-            val built =
-              materialize(pruned, new SourcePlanner(cp, pruned, reader, get).plan())
-            cache.putIfAbsent(name, built)
-            built
-          }
-        }
-      }
-    get
-  }
-
-  /** A hub-provider that only plans the rules in `needed` for each source —
-    * lookup joins and aggregate shuffles feeding unused rules are never
-    * built (see graft.analyze.Pruner for why Catalyst cannot do this).
-    * Each call gets its own cache so different consumers' prunings don't
-    * bleed into each other.
-    */
-  /** Public face of [[prunedHubs]] for callers outside this file that
-    * need hub frames carrying only a known rule set (RelationAudit: the
-    * audit joins read relation KEY columns, not the full enriched hub —
-    * planning every lookup/aggregate rule just to count key matches
-    * re-built the whole fact-hub join tree once per audited relation).
-    */
-  def hubProvider(needed: Map[String, Set[String]]): String => DataFrame =
-    prunedHubs(needed)
-
-  private def prunedHubs(needed: Map[String, Set[String]]): String => DataFrame = {
-    val cache = mutable.Map.empty[String, DataFrame]
-    lazy val get: String => DataFrame = name =>
-      cache.getOrElseUpdate(name, {
-        val cs = cp.compiledSource(name)
-        val keep = needed.getOrElse(name, Set.empty)
-        val pruned = cs.copy(rules = cs.rules.filter(r => keep.contains(r.name)))
-        new SourcePlanner(cp, pruned, reader, get).plan()
-      })
-    get
+    val names = cp.sources.map(_.source.name)
+    val get = hubProvider(allRules)
+    prebuildHubs(names, get)
+    names.map(n => n -> get(n)).toMap
   }
 
   /** Project `cols` out of a source's hub, planning only the rules the
     * selection transitively needs — the API callers should use when they
     * want a column subset of an enriched source.
     */
-  def hubSelect(name: String, cols: String*): DataFrame = {
-    if (materializeDir.isDefined || materializeTables)
-      return hub(name).select(cols.map(c => org.apache.spark.sql.functions.col(SourcePlanner.q(c))): _*)
-    val needed = Pruner.closure(cp, Map(name -> cols.toSet))
-    prunedHubs(needed)(name)
-      .select(cols.map(c => org.apache.spark.sql.functions.col(SourcePlanner.q(c))): _*)
-  }
+  def hubSelect(name: String, cols: String*): DataFrame =
+    hubProvider(Pruner.closure(cp, Map(name -> cols.toSet)))(name)
+      .select(cols.map(c => col(SourcePlanner.q(c))): _*)
 
+  /** An output's frame, its sources planned with only the rules its
+    * mappings and filters transitively reach (VERDICT r1 scale defect #3).
+    */
   def output(name: String): DataFrame = {
     val co = cp.outputs.find(_.output.name == name)
       .getOrElse(throw CompileError(s"Unknown output '$name'"))
-    // Both modes plan each source with only the rules the output's
-    // mappings/filter transitively reach (VERDICT r1 scale defect #3;
-    // r17 extends the pruning to the materialized write — see
-    // prunedMatHubs). Materialized mode still writes + re-reads every hub
-    // in the closure, level-parallel.
-    val needed = Pruner.neededForOutput(cp, co)
-    val hubFn: String => DataFrame =
-      if (materializeDir.isDefined || materializeTables) {
-        val get = prunedMatHubs(needed)
-        prebuildHubs(co.channels.map(_.channel.sourceName).distinct, get)
-        get
-      } else prunedHubs(needed)
-    new OutputPlanner(cp, hubFn).plan(co)
+    val get = hubProvider(Pruner.neededForOutput(cp, co))
+    prebuildHubs(co.channels.map(_.channel.sourceName).distinct, get)
+    new OutputPlanner(cp, get).plan(co)
   }
 
-  /** Execute the full pipeline: all hubs, then write all outputs.
+  /** Execute the full pipeline: all hubs, then write all outputs, each
+    * planned by [[output]] (materialized: served by the full hubs, so every
+    * hub is written exactly once and no subset target at all).
     *
     * Sink per output type (reference: u_validate_output.sql:20-60 +
     * u_output_generate_query.sql:43-48 DROP/CREATE):
@@ -321,7 +268,7 @@ final class Runner(
   def run(outDir: String): Unit = {
     buildAllHubs()
     cp.outputs.foreach { co =>
-      val df = new OutputPlanner(cp, hub).plan(co)
+      val df = output(co.output.name)
       val target = co.output.target
       co.output.outputType match {
         case OutputType.Virtual => df.createOrReplaceTempView(target)
@@ -348,6 +295,42 @@ final class Runner(
 
 object Runner {
   import org.apache.spark.sql.{DataFrameWriter, Row}
+
+  /** Stable digest of a rule-name set (of its sorted names), naming the
+    * materialized target of a strict-subset hub.
+    */
+  private def digest(rules: Set[String]): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(rules.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
+      .take(6).map(b => f"$b%02x").mkString
+
+  /** `names` and everything they transitively depend on, grouped by
+    * dependency depth (level 0 depends on nothing); `deps` must be acyclic.
+    */
+  def levels(names: Seq[String], deps: String => Iterable[String]): Seq[Seq[String]] = {
+    val depth = mutable.LinkedHashMap.empty[String, Int]
+    def visit(n: String): Int = depth.getOrElse(n, {
+      val d = deps(n).foldLeft(0)((d, m) => d max (visit(m) + 1))
+      depth(n) = d
+      d
+    })
+    names.foreach(visit)
+    depth.toSeq.groupBy(_._2).toSeq.sortBy(_._1).map(_._2.map(_._1))
+  }
+
+  /** `f` over every item, from a pool of at most 4 threads (inline for a
+    * single item); returns once all are done; a failure surfaces as the
+    * `ExecutionException` of the first failed item.
+    */
+  def inParallel[A](items: Seq[A])(f: A => Unit): Unit =
+    if (items.size <= 1) items.foreach(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(items.size, 4))
+      try items.map(a => pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = f(a)
+      })).foreach(_.get())
+      finally pool.shutdown()
+    }
 
   /** Idempotent CTAS (the reference's DROP TABLE IF EXISTS + CREATE TABLE
     * AS): drops any registered table first, and also removes an ORPHANED

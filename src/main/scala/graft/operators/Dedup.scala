@@ -249,7 +249,7 @@ object Dedup {
     val sh = shingleRows(docs, textCol, n) // doc_id, n_sh, shingle
       .localCheckpoint(false)
     val df = sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
-    val byDocBase = sh.join(df, "shingle")
+    val byDoc = sh.join(df, "shingle")
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("__df"), col("shingle"))))
         .as("__ord"))
@@ -258,7 +258,6 @@ object Dedup {
         expr(s"""transform(
           slice(__ord, 1, CAST(size(__ord) - ceil($threshold * size(__ord)) + 1 AS INT)),
           x -> x.shingle)""").as("__pref"))
-    val byDoc = byDocBase
     val idxBase = byDoc.select(col("doc_id"), explode(col("__pref")).as("__p"))
     // verifyPar spread (r17, measured placement): the CPU lives in two
     // post-exchange waves whose BYTES are tiny (so AQE coalesces them to

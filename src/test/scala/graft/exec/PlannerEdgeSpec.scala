@@ -398,4 +398,82 @@ class PlannerEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
     run(p, Map("s" -> t)).run(tmp)
     assert(spark.table("vout").count() == 1)
   }
+
+  // --- the hub store: one (source, rule-set) store, one lock per target
+
+  private val sfDir = "/root/testdata/sf0.001"
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  test("materialized hub then outputs: no output rewrites the shared hub") {
+    // a pruned output used to overwrite enriched_tpch_lineitem with fewer
+    // columns, deleting the files the earlier hub frame reads
+    val cp = new Compiler(graft.SampleProject.project).compile()
+    val tmp = java.nio.file.Files.createTempDirectory("graftstore").toString
+    val mat = new Runner(cp, Runners.parquetDir(sfDir), materializeDir = Some(tmp))
+    val lazyRunner = new Runner(cp, Runners.parquetDir(sfDir))
+    val hub = mat.hub("tpch_lineitem")
+    val featureCustomer = mat.output("feature_customer")
+    val orderStats = mat.output("order_stats")
+    val lazyHub = lazyRunner.hub("tpch_lineitem")
+    assert(hub.columns.toSeq == lazyHub.columns.toSeq)
+    assert(rows(hub) == rows(lazyHub))
+    assert(rows(featureCustomer) == rows(lazyRunner.output("feature_customer")))
+    assert(rows(orderStats) == rows(lazyRunner.output("order_stats")))
+  }
+
+  test("concurrent hub and output write each target at most once") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val cp = new Compiler(graft.SampleProject.project).compile()
+    val tmp = java.nio.file.Files.createTempDirectory("graftrace").toString
+    val mat = new Runner(cp, Runners.parquetDir(sfDir), materializeDir = Some(tmp))
+    // description -> SQL executions (one per write; its AQE, broadcast and
+    // read-back jobs share the description but not a second execution)
+    val writes = new java.util.concurrent.ConcurrentHashMap[String, java.util.Set[String]]()
+    val marker = "hub-store-spec: done"
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val desc = Option(e.properties.getProperty("spark.job.description")).getOrElse("")
+        if (desc == marker) seen.countDown()
+        Option(e.properties.getProperty("spark.sql.execution.id"))
+          .filter(_ => desc.startsWith("hub materialize: "))
+          .foreach(writes.computeIfAbsent(desc,
+            _ => java.util.concurrent.ConcurrentHashMap.newKeySet[String]()).add(_))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Runner.inParallel(Seq[() => DataFrame](
+        () => mat.hub("tpch_lineitem"), () => mat.output("feature_customer")))(f => f())
+      // listener events arrive in order: once the marker job is seen,
+      // every hub write before it has been counted
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val perTarget = writes.asScala.map { case (d, ids) => d -> ids.size }.toMap
+    assert(perTarget.contains("hub materialize: tpch_lineitem"), perTarget)
+    assert(perTarget.values.forall(_ == 1), s"a target was written twice: $perTarget")
+    // each description names its written target, <hubName>[_<digest>]
+    perTarget.keys.foreach { d =>
+      val target = new java.io.File(tmp, "enriched_" + d.stripPrefix("hub materialize: "))
+      assert(target.isDirectory, s"$d names no target")
+    }
+  }
+
+  test("materialized run writes only the full hub targets") {
+    val cp = new Compiler(graft.SampleProject.project).compile()
+    val tmp = java.nio.file.Files.createTempDirectory("graftrunhubs").toString
+    val out = java.nio.file.Files.createTempDirectory("graftrunout").toString
+    new Runner(cp, Runners.parquetDir(sfDir), materializeDir = Some(tmp)).run(out)
+    assert(new java.io.File(tmp).list().toSet == cp.sources.map(_.source.hubName).toSet)
+  }
+
+  test("levels groups names and their dependencies by depth") {
+    val deps = Map("a" -> Seq("b", "c"), "b" -> Seq("d"), "c" -> Seq("d"), "d" -> Nil,
+      "e" -> Nil)
+    val lv = Runner.levels(Seq("a", "e"), deps)
+    assert(lv.map(_.toSet) == Seq(Set("d", "e"), Set("b", "c"), Set("a")))
+  }
 }
